@@ -12,10 +12,15 @@ keeps dependency ordering, transient-failure retry, branch isolation
 task (campaign attribution — analytics_dag.py:325-328), and logical-
 date backfill — without an external scheduler.
 
-Scale note: orchestration is pure driver-side control flow over lazy
-DataFrames — a task "running" builds a plan; Spark executes when a
-sink task materializes it.  Nothing here touches executor-side data
-paths, so the module is scale-neutral by construction.
+Scale note: orchestration is pure driver-side control flow.  Most
+tasks return lazy DataFrames: "running" one builds a plan, and Spark
+executes it when a consumer acts on it.  The exceptions are the tasks
+that build the keyed dimensions and the order fact
+(``pipeline._materialize``) and the ``validate_*`` quality checks:
+those run Spark jobs inside the task, so their failures are retried
+and attributed there, and ``TaskRun.wall_s`` / ``attempt_s`` say which
+task a run waits on.  Nothing here touches executor-side data paths,
+so the module is scale-neutral by construction.
 """
 
 from __future__ import annotations
@@ -50,10 +55,16 @@ class Task:
 
 @dataclass
 class TaskRun:
+    """One task's outcome.  ``attempt_s`` holds the wall of each
+    attempt; ``wall_s`` spans first start to last end, retry delays
+    included.  Tasks decided without executing (skipped, upstream
+    failed) keep 0.0 and []."""
     state: State
     attempts: int = 0
     error: Exception | None = None
     result: Any = None
+    wall_s: float = 0.0
+    attempt_s: list[float] = field(default_factory=list)
 
 
 @dataclass
@@ -124,10 +135,12 @@ class Dag:
 
     def _execute(self, t: Task, results: dict[str, Any]) -> TaskRun:
         run = TaskRun(state=State.FAILED)
+        start = time.perf_counter()
         for attempt in range(1 + t.retries):
             run.attempts = attempt + 1
             if attempt:
                 self.sleep(t.retry_delay)
+            t0 = time.perf_counter()
             try:
                 run.result = t.fn(dict(results))
                 run.state = State.SUCCESS
@@ -135,6 +148,9 @@ class Dag:
                 break
             except Exception as e:           # noqa: BLE001 - retry boundary
                 run.error = e
+            finally:
+                run.attempt_s.append(time.perf_counter() - t0)
+        run.wall_s = time.perf_counter() - start
         if run.state is not State.SUCCESS and t.soft_fail:
             run.state = State.SOFT_FAILED
             run.result = None

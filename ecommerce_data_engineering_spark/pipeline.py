@@ -11,6 +11,18 @@ Scale posture: dims broadcast; facts shuffle once on their join key;
 every analytics table is a single groupBy; campaign attribution uses
 the broadcast range join (25 campaigns) with the date-expansion
 equi-join available for bigger campaign tables.
+
+Materialization point: everything here returns a lazy plan except the
+three warehouse tables that several consumers share — both keyed SCD2
+dimensions (``_attach_surrogate``) and ``fact_orders``
+(``build_fact_orders``).  Those end in ``_materialize``, so each is
+computed once per run, where the reference's warehouse task writes its
+Postgres table (warehouse_dag.py:31-227).  The quality checks, the
+downstream facts and analytics, and the caller's writes then read the
+stored rows instead of re-running the SCD2 merge, the durable key
+mapping and the keyed upsert once per action; and every consumer sees
+one computation of the surrogate keys.  ``run_pipeline`` and
+``orchestration.pipeline_dag`` both go through these two functions.
 """
 
 from __future__ import annotations
@@ -144,6 +156,23 @@ def build_dim_time(orders_staged: DataFrame,
     return insert_if_absent(prior, fresh, "time_key")
 
 
+def _materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and return a plan that reads the stored rows.
+
+    ``localCheckpoint`` cuts the lineage, so downstream plans analyze a
+    ``LogicalRDD`` leaf instead of the SCD2 tree, and Spark's
+    ContextCleaner frees the blocks once the returned DataFrame is
+    dropped.  ``persist`` would keep a CacheManager entry alive across
+    runs until something unpersists it, and nothing in the DAG knows
+    when the caller has finished writing.
+
+    Cluster caveat: local-checkpoint blocks live on the executors and
+    are lost with an executor.  The engine runs in local mode, where
+    driver and executor are one JVM; on a cluster this is the one place
+    to switch to a reliable ``checkpoint()`` under a checkpoint dir."""
+    return df.localCheckpoint(eager=True)
+
+
 def _surrogate(dim: DataFrame, natural_key: str, surrogate: str) -> DataFrame:
     """P20: surrogate keys for current dim rows.
 
@@ -165,7 +194,13 @@ def _attach_surrogate(dim: DataFrame, prior_dim: DataFrame | None,
     """Join the durable key mapping onto every version row of the dim
     (all versions of a natural key share one surrogate — SERIAL
     parity).  Prior keys are reused verbatim; only first-seen keys get
-    new values (max prior + row_number over the new keys alone)."""
+    new values (max prior + row_number over the new keys alone).
+
+    The keyed dim is materialized (``_materialize``): the current-row
+    and orphan checks, every fact and metric that resolves keys, and
+    the caller's write all read one computation of the SCD2 merge and
+    the key mapping, and a failure in either surfaces here, in the task
+    that builds the dimension."""
     from .operators.keys import surrogate_mapping
 
     prior_map = (prior_dim.select(natural_key, surrogate).distinct()
@@ -176,8 +211,8 @@ def _attach_surrogate(dim: DataFrame, prior_dim: DataFrame | None,
     # natural key a durable surrogate; a plain equi-join would drop
     # that dim row here (NULL = NULL is never true)
     m = mapping.select(F.col(natural_key).alias("__nk"), surrogate)
-    return (dim.join(m, F.col(natural_key).eqNullSafe(F.col("__nk")))
-            .drop("__nk"))
+    return _materialize(dim.join(m, F.col(natural_key).eqNullSafe(F.col("__nk")))
+                        .drop("__nk"))
 
 
 def _drop_if_present(df: DataFrame | None, col: str) -> DataFrame | None:
@@ -189,7 +224,12 @@ def build_fact_orders(orders_staged: DataFrame, dim_customers: DataFrame,
     """warehouse_dag.py:202-227: resolve surrogate keys against current
     dim rows (J1/J4), smart date key (P8), profit = total−tax−shipping
     (P12), `total_items = 1` hardcode (quirk, warehouse_dag.py:224),
-    idempotent keyed upsert (M2)."""
+    idempotent keyed upsert (M2).
+
+    The result is materialized (``_materialize``): the orphan check,
+    ``fact_order_items``, the order analytics and the caller's write
+    read the stored fact instead of re-running the join and the
+    upsert."""
     dim = _surrogate(dim_customers, "customer_id", "customer_key")
     fact = (
         orders_staged.join(F.broadcast(dim.select("customer_id", "customer_key")),
@@ -206,7 +246,8 @@ def build_fact_orders(orders_staged: DataFrame, dim_customers: DataFrame,
             F.lit(1).alias("total_items"),
         )
     )
-    return fact if prior is None else keyed_upsert(prior, fact, "order_id")
+    return _materialize(fact if prior is None
+                        else keyed_upsert(prior, fact, "order_id"))
 
 
 def build_fact_order_items(items_staged: DataFrame, fact_orders: DataFrame,

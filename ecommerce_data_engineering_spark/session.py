@@ -13,6 +13,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+# local mode runs driver and executors in one JVM, so this heap is the
+# engine's whole memory budget; the rest of the host stays for off-heap
+# buffers, Python workers and the page cache
+HEAP_SHARE = 0.6
+
+
+def heap_for(mem_total: int, cgroup_max: int | None = None) -> str:
+    """``spark.driver.memory`` for a host with ``mem_total`` bytes of
+    RAM and an optional cgroup ``memory.max`` limit in bytes:
+    ``HEAP_SHARE`` of the lower of the two, in MiB."""
+    limit = mem_total if cgroup_max is None else min(mem_total, cgroup_max)
+    return f"{max(1, int(limit * HEAP_SHARE) >> 20)}m"
+
+
+def _host_heap() -> str:
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            cgroup = int(f.read())
+    except (OSError, ValueError):        # no cgroup v2 limit ("max")
+        cgroup = None
+    return heap_for(total, cgroup)
+
 
 def get_spark(app_name: str = "ecommerce_data_engineering_spark",
               cpus: int | None = None,
@@ -30,6 +53,10 @@ def get_spark(app_name: str = "ecommerce_data_engineering_spark",
       host timezone (and matches the DuckDB oracle, which is UTC-naive).
     - ANSI mode stays at the Spark 4 default (on); coercion semantics
       that need invalid→NULL use ``try_cast`` explicitly.
+
+    The heap defaults to ``HEAP_SHARE`` of host memory, or of the
+    cgroup limit when that is lower (``heap_for``);
+    ``SPARK_DRIVER_MEMORY`` overrides it.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
@@ -62,7 +89,8 @@ def get_spark(app_name: str = "ecommerce_data_engineering_spark",
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _host_heap())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the driver fixtures store events.ts as TIMESTAMP(NANOS), which

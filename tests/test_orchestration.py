@@ -58,6 +58,42 @@ def test_retry_recovers_transient_failure():
     assert slept == [0.25]
 
 
+def test_task_runs_record_wall_and_attempt_durations():
+    """Every executed task records one duration per attempt and a wall
+    spanning them (retry delay included), on the sequential and the
+    parallel path alike; tasks decided without running record none."""
+    import time as _time
+
+    def build():
+        d = Dag("timed", default_retries=1, default_retry_delay=0.05)
+        calls = {"n": 0}
+
+        def flaky(r):
+            calls["n"] += 1
+            _time.sleep(0.05)
+            if calls["n"] == 1:
+                raise RuntimeError("transient")
+            return "ok"
+
+        d.task("flaky", flaky)
+        d.task("boom", lambda r: 1 / 0, retries=0)
+        d.task("blocked", _nop, upstream=("boom",))
+        return d
+
+    for runs in (build().run(), build().run(max_workers=2)):
+        flaky = runs["flaky"]
+        assert flaky.state is State.SUCCESS and flaky.attempts == 2
+        assert len(flaky.attempt_s) == 2
+        assert all(s >= 0.05 for s in flaky.attempt_s)
+        assert flaky.wall_s >= sum(flaky.attempt_s) + 0.05
+        assert runs["boom"].state is State.FAILED
+        assert len(runs["boom"].attempt_s) == 1
+        assert runs["boom"].wall_s >= runs["boom"].attempt_s[0]
+        blocked = runs["blocked"]
+        assert blocked.state is State.UPSTREAM_FAILED
+        assert blocked.wall_s == 0.0 and blocked.attempt_s == []
+
+
 def test_hard_failure_blocks_descendants_only():
     """warehouse_dag.py:554-563 semantics: a failed branch blocks its
     own descendants; sibling branches still run."""
@@ -282,3 +318,41 @@ def test_duplicate_upstream_entries_do_not_fake_a_cycle(spark):
     d.task("b", lambda r: r["a"] + 1, upstream=("a", "a"))
     runs = d.run()
     assert runs["b"].result == 2
+
+
+# Spark jobs of ``validate_warehouse_data`` on the incremental day below:
+# 51 when every check re-ran the SCD2 merge, key mapping and fact
+# upsert; 7 once those tables are materialized by their own tasks
+VALIDATE_WAREHOUSE_JOBS = 7
+
+
+def test_validate_warehouse_reads_materialized_tables(spark):
+    """On an incremental day the warehouse checks read the stored dims
+    and fact instead of recomputing their lineage: the task's job count,
+    taken from its own job group, stays at the measured budget."""
+    from ecommerce_data_engineering_spark.sources.synthetic import (
+        generate_ecommerce,
+    )
+    from tests.test_pipeline import dag_warehouse, incremental_raw
+
+    prior = dag_warehouse(spark, generate_ecommerce(spark, scale=0.05),
+                          "2024-07-09")
+    d = pipeline_dag(spark, incremental_raw(spark, 0.05), "2024-07-10",
+                     prior=prior)
+    task = d._tasks["validate_warehouse_data"]
+    checks, group = task.fn, "validate-warehouse-jobs"
+    sc = spark.sparkContext
+
+    def grouped(r):
+        sc.setJobGroup(group, "validate_warehouse_data")
+        try:
+            return checks(r)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    task.fn = grouped
+    runs = d.run()
+    assert runs["validate_warehouse_data"].state is State.SUCCESS
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= VALIDATE_WAREHOUSE_JOBS, len(jobs)
